@@ -17,15 +17,16 @@ import org.apache.spark.sql.types.StructType
   * `copy → check → premerge → merge_core → [dim_security, dim_date] →
   * fact → postmerge`) collapsed into one driver call per trading date.
   *
-  * Layer tables are parquet directories under `warehouseDir`, partitioned
-  * by `trade_date` where date-scoped (RAW/CORE/REJECT/FACT) so every
-  * incremental run prunes to one partition and rewrites only it
-  * (dynamic partition overwrite = the MERGE of SURVEY.md §2.5).
-  *
-  * Storage goes through the Hadoop `FileSystem` API, so the warehouse can
-  * live on any supported filesystem (file:/, hdfs:/, s3a:/ ...). One
-  * caveat is documented on [[EodPipeline.replace]]: the dim swap uses
-  * rename, which is atomic on HDFS/local but copy-based on object stores.
+  * Layer tables are parquet directories under `warehouseDir`; the
+  * date-scoped ones (RAW/CORE/REJECT/FACT) are hive-partitioned
+  * `<table>/trade_date=YYYY-MM-DD/` (the date only in the directory name),
+  * and a run rewrites only its own date's directory — the reference's
+  * per-`TRADE_DATE` MERGE (SURVEY.md §2.5). Every write is one staged swap
+  * (`publish`) that the next run's `recover` completes or discards after a
+  * crash. Storage goes through the Hadoop `FileSystem` API (file:/, hdfs:/,
+  * s3a:/ ...); the swap is a directory rename, atomic on HDFS and local
+  * disk but a non-atomic per-file copy on object stores, where a
+  * deployment should point a catalog entry at the new directory instead.
   */
 final case class RunResult(tradeDate: java.sql.Date,
                            pre: PreMergeMetrics, post: PostMergeMetrics)
@@ -37,14 +38,9 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
   private val fs: FileSystem =
     new Path(warehouseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(p: String): Boolean = fs.exists(new Path(p))
-
-  private def readOrEmpty(t: String, schema: StructType): DataFrame = {
-    val p = path(t)
-    if (exists(p)) spark.read.schema(schema).parquet(p)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
+  private def readOrEmpty(t: String, schema: StructType): DataFrame =
+    if (fs.exists(new Path(path(t)))) spark.read.schema(schema).parquet(path(t))
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Run the full cascade for one trading date over a bronze CSV path.
     *
@@ -94,6 +90,10 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
                ingestTs: Option[java.sql.Timestamp] = None,
                forceReload: Boolean = false,
                skippedCnt: Long = 0L): RunResult = {
+    recover()
+    def publishDate(df: DataFrame, table: String): Unit =
+      publish(df.filter(col("trade_date") === lit(runDate)).drop("trade_date"),
+        s"$table/trade_date=$runDate")
     // t04.2 check (A2)
     Gates.requireNonEmpty(batch, s"raw batch $runDate")
 
@@ -104,7 +104,7 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     val rawIncoming =
       if (forceReload) batch
       else batch.join(raw0.select("_src_file").distinct(), Seq("_src_file"), "left_anti")
-    writeDatePartition(raw0.unionByName(rawIncoming), RawTable, runDate)
+    publishDate(raw0.unionByName(rawIncoming), RawTable)
 
     // t04.3 premerge metrics (Q1) — against CORE as it stands
     val core0 = readOrEmpty(CoreTable, Schemas.core)
@@ -123,7 +123,7 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     val rejectNew = Upsert.insertOnly(
       reject0, Gates.annotateReject(rejects, "NEGATIVE_VOLUME"),
       Seq("symbol", "trade_date"))
-    writeDatePartition(rejectNew, RejectTable, runDate)
+    publishDate(rejectNew, RejectTable)
 
     val loadTs = ingestTs.map(t => lit(t)).getOrElse(current_timestamp())
     val deduped = Dedup.latestIngestWins(valid)
@@ -133,17 +133,17 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     val coreNew = Upsert.merge(
       core0.filter(col("trade_date") === lit(runDate)), deduped,
       Seq("symbol", "trade_date"))
-    writeDatePartition(coreNew, CoreTable, runDate)
+    publishDate(coreNew, CoreTable)
 
     // t04.5 dims (M3/M4) — insert-only, not date-partitioned
     val dim0 = readOrEmpty(DimSecurityTable, Schemas.dimSecurity)
     val dimSec = DimSecurity.merge(dim0, deduped.select("symbol"))
-    replace(dimSec, path(DimSecurityTable))
+    publish(dimSec, DimSecurityTable)
 
     val dimDate0 = readOrEmpty(DimDateTable, Schemas.dimDate)
     val dimDate = Upsert.insertOnly(dimDate0,
       DimDate.derive(deduped.select("trade_date"), "trade_date"), Seq("date_sk"))
-    replace(dimDate, path(DimDateTable))
+    publish(dimDate, DimDateTable)
 
     // t04.6 fact (J3/M5)
     val core1 = readOrEmpty(CoreTable, Schemas.core)
@@ -151,7 +151,7 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     val factNew = FactDailyPrice.build(core1,
       spark.read.parquet(path(DimSecurityTable)),
       spark.read.parquet(path(DimDateTable)))
-    writeDatePartition(factNew, FactTable, runDate)
+    publishDate(factNew, FactTable)
 
     // t04.7 postmerge metrics (Q2)
     val post = Audit.postMerge(
@@ -160,38 +160,37 @@ class EodPipeline(spark: SparkSession, warehouseDir: String) {
     RunResult(runDate, pre, post)
   }
 
-  /** Overwrite one date partition with a result that was (lazily) derived
-    * from the SAME table. Writing a path that the plan also reads is a
-    * correctness hazard ("Cannot overwrite a path that is also being read
-    * from" at best, partial-read data loss at worst), so the result is
-    * first materialized to a scratch dir, re-read, and only then swapped
-    * into the target partition. Two writes of ONE date's slice — bounded,
-    * partition-pruned IO, safe on any filesystem. */
-  private def writeDatePartition(df: DataFrame, table: String, d: java.sql.Date): Unit = {
-    val scratch = s"$warehouseDir/_tmp/$table"
-    df.filter(col("trade_date") === lit(d))
-      .write.mode("overwrite").parquet(scratch)
-    Upsert.overwriteDatePartition(spark, spark.read.parquet(scratch), path(table))
-    fs.delete(new Path(scratch), true)
-    ()
+  private val staging = new Path(path("_staging"))
+
+  /** The one write path: `df` becomes `<warehouse>/<rel>`. It is written
+    * once to `_staging/<rel>`, and only after that job has committed is
+    * the live `<rel>` deleted and the staged directory renamed into place,
+    * so `df` may lazily read the very directory it replaces. */
+  private def publish(df: DataFrame, rel: String): Unit = {
+    df.write.mode("overwrite").parquet(new Path(staging, rel).toString)
+    swap(rel)
+    fs.delete(staging, true)
   }
 
-  /** Small non-partitioned tables (dims): write to a scratch dir, then
-    * delete-and-rename into place via the Hadoop FileSystem API. Rename
-    * is atomic on HDFS/local but copy-based (non-atomic) on object
-    * stores; for the tiny dims the exposure window is milliseconds, and a
-    * production object-store deployment would point a catalog entry at
-    * the new dir instead (documented scope). */
-  private def replace(df: DataFrame, tablePath: String): Unit = {
-    val tmp = new Path(tablePath + "__tmp")
-    val target = new Path(tablePath)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(target)) fs.delete(target, true)
-    // rename signals failure via its return value, not an exception — an
-    // ignored false here would silently destroy the table we just deleted
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(
-        s"rename $tmp -> $target failed; new table preserved at $tmp")
+  private def swap(rel: String): Unit = {
+    val (from, to) = (new Path(staging, rel), new Path(path(rel)))
+    fs.delete(to, true)
+    fs.mkdirs(to.getParent)
+    // rename reports failure by its return value, not by an exception
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")
+  }
+
+  /** Settle what a crashed [[publish]] left in `_staging` (units are `<dim>`
+    * or `<table>/trade_date=<d>`): a committed unit (`_SUCCESS`) is swapped
+    * into place, a partial one is deleted. */
+  private def recover(): Unit = if (fs.exists(staging)) {
+    for (t <- fs.listStatus(staging).map(_.getPath.getName);
+         dates = fs.listStatus(new Path(staging, t)).toSeq.map(_.getPath.getName)
+           .filter(_.startsWith("trade_date="));
+         rel <- if (dates.isEmpty) Seq(t) else dates.map(d => s"$t/$d")
+         if fs.exists(new Path(staging, s"$rel/_SUCCESS")))
+      swap(rel)
+    fs.delete(staging, true)
   }
 }
 

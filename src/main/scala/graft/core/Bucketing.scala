@@ -89,19 +89,24 @@ object Bucketing {
     * order-free by construction: the reconcile path
     * ([[Reconcile.appendExact]]) converges store and counts from ANY
     * committed subset via a touched-key recount, so which append
-    * commits first never mattered. Both thunks are awaited; the first
-    * failure propagates after both have settled (a half-committed pair
+    * commits first never mattered. Both thunks run on a pool of their
+    * own (never the shared global one, so nested calls cannot starve it)
+    * and are awaited; the first failure propagates after both have
+    * settled, carrying the second as suppressed (a half-committed pair
     * is exactly the state the intent marker already brackets). */
   def inParallel(a: => Unit, b: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val fa = Future(a)
-    val fb = Future(b)
-    // settle both before propagating either failure
-    val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-    val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-    ra.get; rb.get
+    import scala.util.{Failure, Try}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val (fa, fb) = (Future(a), Future(b))
+      (Try(Await.result(fa, Duration.Inf)), Try(Await.result(fb, Duration.Inf))) match {
+        case (Failure(ea), Failure(eb)) => ea.addSuppressed(eb); throw ea
+        case (ra, rb) => ra.get; rb.get
+      }
+    } finally pool.shutdown()
   }
 
   /** Staging-table name used by the swap-based rewrites. */

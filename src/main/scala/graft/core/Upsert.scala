@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB): the anti join shuffles on the merge key unless
   * one side broadcasts — dims always broadcast; for the date-scoped fact
   * and core merges, read ONLY the affected `trade_date=` partitions of the
-  * target (partition pruning), anti-join that slice, and rewrite it with
-  * `partitionOverwriteMode=dynamic` so untouched dates are never
-  * re-written.
+  * target (partition pruning) and anti-join that slice, so untouched dates
+  * are never re-written. The planners only build DataFrames; persisting
+  * the merged slice is the caller's job (`EodPipeline` swaps one date
+  * directory per run).
   */
 object Upsert {
 
@@ -58,11 +59,16 @@ object Upsert {
       keys, "left_anti")
       .unionByName(source)
 
-  /** Write one date's slice of a date-partitioned parquet table with
-    * dynamic partition overwrite — the physical realization of a
-    * date-scoped MERGE. Idempotent under reruns. The overwrite mode is
-    * scoped to THIS writer via `.option(...)`, never the shared session
-    * conf (a session-conf mutation would leak into every other query). */
+  /** Write the dates present in `df` into a date-partitioned parquet
+    * table with dynamic partition overwrite: every `trade_date=` directory
+    * `df` has rows for is replaced, all others are kept. Idempotent under
+    * reruns, but not crash-safe (the commit deletes each replaced
+    * directory before moving its new files in, and nothing recovers a
+    * crash in between), so it suits bulk multi-date loads such as seeding
+    * a warehouse; the daily cascade's one-date writes go through
+    * `EodPipeline`'s staged swap instead. The overwrite mode is scoped to
+    * THIS writer via `.option(...)`, never the shared session conf (a
+    * session-conf mutation would leak into every other query). */
   def overwriteDatePartition(spark: SparkSession, df: DataFrame,
                              tablePath: String, partitionCol: String = "trade_date"): Unit = {
     df.write

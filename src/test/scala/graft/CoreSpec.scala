@@ -513,6 +513,17 @@ class BucketingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS bkt_stale__compact")
     }
   }
+
+  test("inParallel settles both thunks and keeps the second failure as suppressed") {
+    val settled = new java.util.concurrent.atomic.AtomicInteger
+    def fail(msg: String): Unit = {
+      Thread.sleep(50); settled.incrementAndGet(); throw new IllegalStateException(msg)
+    }
+    val e = intercept[IllegalStateException](graft.core.Bucketing.inParallel(fail("a"), fail("b")))
+    assert(settled.get == 2)
+    assert(e.getMessage == "a")
+    assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("b"))
+  }
 }
 
 /** A-family percentiles: the approx sketch (the 100 TB path) must land

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 import java.sql.{Date, Timestamp}
 
 /** End-to-end cascade test (SURVEY.md §3.1 / VERDICT item 7): the FIXTURES
@@ -12,6 +14,10 @@ class EodPipelineSpec extends SparkSpec {
   private val ts2 = Timestamp.valueOf("2026-08-11 21:05:00")
   private val d1 = Date.valueOf("2026-08-10")
   private val d2 = Date.valueOf("2026-08-11")
+
+  private val staging = "_staging"
+  private val dateTables = Seq(EodPipeline.RawTable, EodPipeline.RejectTable,
+    EodPipeline.CoreTable, EodPipeline.FactTable)
 
   private def snapshot(wh: String, table: String, dropCols: Seq[String]): Seq[Seq[Any]] = {
     val df = spark.read.parquet(s"$wh/$table")
@@ -81,6 +87,21 @@ class EodPipelineSpec extends SparkSpec {
     // first date's partitions untouched by the second run
     assert(spark.read.parquet(s"$wh/${EodPipeline.CoreTable}")
       .filter(col("trade_date") === lit(d1)).count() == 5)
+
+    // the on-disk layout external readers (DuckDB, Power BI) rely on: no
+    // scratch left behind, hive `trade_date=` directories only, and the
+    // date lives in the directory name, never inside the files
+    assert(!Files.exists(Paths.get(wh, staging)) && !Files.exists(Paths.get(wh, "_tmp")))
+    dateTables.foreach { t =>
+      val parts = Paths.get(wh, t).toFile.listFiles().toSeq
+      assert(parts.map(_.getName).sorted ==
+        Seq("trade_date=2026-08-10", "trade_date=2026-08-11"), t)
+      parts.foreach { p =>
+        assert(p.isDirectory, p)
+        assert(!spark.read.option("mergeSchema", "true").parquet(p.toString)
+          .columns.contains("trade_date"), p)
+      }
+    }
   }
 
   test("rerun of the same date is idempotent on every layer (non-ts columns)") {
@@ -150,5 +171,105 @@ class EodPipelineSpec extends SparkSpec {
     intercept[graft.quality.GateFailed] {
       pipe.run(csv, Date.valueOf("2026-08-12"), Some(ts1)) // no rows for date
     }
+  }
+
+  // ---- crash drills -------------------------------------------------------
+  // Each drill builds, directly on disk, the state a run leaves when it
+  // dies inside one table write, reruns that date, and requires the
+  // warehouse to equal a clean run's. A write is staged whole under
+  // `_staging/<rel>` (committed once `_SUCCESS` exists), then the live
+  // `<rel>` is deleted and the staged directory renamed into place.
+
+  private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Replace `to/<rel>` (or create it) with a copy of `from/<rel>`. */
+  private def copyRel(from: String, to: String, rel: String): Unit = {
+    fs.delete(new Path(s"$to/$rel"), true)
+    FileUtil.copy(fs, new Path(s"$from/$rel"), fs, new Path(s"$to/$rel"), false,
+      spark.sparkContext.hadoopConfiguration)
+  }
+
+  /** A committed staged copy of `clean/<rel>` in `wh`, as a crashed write
+    * leaves it between its commit and its rename. */
+  private def stageFrom(clean: String, wh: String, rel: String): Unit =
+    spark.read.parquet(s"$clean/$rel").write.parquet(s"$wh/$staging/$rel")
+
+  private def assertSameWarehouse(wh: String, clean: String): Unit = {
+    EodPipeline.AllTables.foreach { t =>
+      assert(snapshot(wh, t, Nil) == snapshot(clean, t, Nil), s"table $t differs from a clean run")
+    }
+    def idToSymbol(w: String) = spark.read.parquet(s"$w/${EodPipeline.FactTable}")
+      .join(spark.read.parquet(s"$w/${EodPipeline.DimSecurityTable}"), "security_id")
+      .select("trade_date", "security_id", "symbol").collect().map(_.toSeq).toSet
+    assert(idToSymbol(wh) == idToSymbol(clean), "FACT ⋈ DIM_SECURITY re-keyed")
+    assert(!Files.exists(Paths.get(wh, staging)), "staging left behind")
+  }
+
+  /** `crashed` as a run that `clean` completed leaves it when it dies in
+    * its dim_security write: RAW/REJECT/CORE published, nothing after. */
+  private def diedInDimWrite(clean: String, crashed: String): Unit =
+    Seq(EodPipeline.RawTable, EodPipeline.RejectTable, EodPipeline.CoreTable)
+      .foreach(copyRel(clean, crashed, _))
+
+  /** A warehouse after a clean run of `first`, and its clean twin. */
+  private def twins(first: String, date: Date, ts: Timestamp): (String, String) = {
+    val clean = Fixtures.tempDir("wh-clean").resolve("wh").toString
+    val crashed = Fixtures.tempDir("wh-crash").resolve("wh").toString
+    new EodPipeline(spark, clean).run(first, date, Some(ts))
+    copyRel(clean, crashed, "")
+    (clean, crashed)
+  }
+
+  test("crash drill: a dim deleted before its rename is rolled forward, ids never restart") {
+    val bronze = Fixtures.tempDir("bronze").toString
+    val (clean, crashed) = twins(Fixtures.writeStandard(bronze, "2026-08-10"), d1, ts1)
+    // the next date lists AMD, which sorts first: an id sequence
+    // restarted over this date's symbols would hand it id 1
+    val next = Fixtures.writeBronze(bronze, "2026-08-11", Fixtures.goodRows("2026-08-11") :+
+      "2026-08-11,AMD,160.00,162.00,158.00,161.00,9999999")
+    new EodPipeline(spark, clean).run(next, d2, Some(ts2))
+    // date 2 died between deleting the old dim and renaming the staged
+    // one: dim_date and FACT still stand at date 1
+    diedInDimWrite(clean, crashed)
+    stageFrom(clean, crashed, EodPipeline.DimSecurityTable)
+    fs.delete(new Path(s"$crashed/${EodPipeline.DimSecurityTable}"), true)
+
+    new EodPipeline(spark, crashed).run(next, d2, Some(ts2))
+    assertSameWarehouse(crashed, clean)
+  }
+
+  test("crash drill: a RAW date deleted before its rename keeps both files' rows") {
+    val bronze = Fixtures.tempDir("bronze").toString
+    val (clean, crashed) = twins(Fixtures.writeStandard(bronze, "2026-08-10"), d1, ts1)
+    val late = Fixtures.writeBronze(bronze, "2026-08-10", Seq(
+      "2026-08-10,AAPL,231.15,233.90,230.40,240.00,51234567",
+      "2026-08-10,AMD,160.00,162.00,158.00,161.00,9999999"),
+      "eod_prices_2026-08-10_corr.csv")
+    new EodPipeline(spark, clean).run(late, d1, Some(ts2))
+    // the correction run died inside its RAW write: both files' rows are
+    // staged, the live date directory is already deleted
+    val rawDate = s"${EodPipeline.RawTable}/trade_date=2026-08-10"
+    stageFrom(clean, crashed, rawDate)
+    fs.delete(new Path(s"$crashed/$rawDate"), true)
+
+    new EodPipeline(spark, crashed).run(late, d1, Some(ts2))
+    assertSameWarehouse(crashed, clean)
+    assert(spark.read.parquet(s"$crashed/${EodPipeline.RawTable}").count() == 20)
+  }
+
+  test("crash drill: a partial staged write next to its live table is discarded, never swapped in") {
+    val bronze = Fixtures.tempDir("bronze").toString
+    val (clean, crashed) = twins(Fixtures.writeStandard(bronze, "2026-08-10"), d1, ts1)
+    val next = Fixtures.writeStandard(bronze, "2026-08-11")
+    new EodPipeline(spark, clean).run(next, d2, Some(ts2))
+    // date 2 died mid-way through writing the staged dim: a partial
+    // write (no `_SUCCESS`) with fewer rows than the live dim beside it
+    diedInDimWrite(clean, crashed)
+    val dim = EodPipeline.DimSecurityTable
+    spark.read.parquet(s"$crashed/$dim").limit(2).write.parquet(s"$crashed/$staging/$dim")
+    assert(fs.delete(new Path(s"$crashed/$staging/$dim/_SUCCESS"), false))
+
+    new EodPipeline(spark, crashed).run(next, d2, Some(ts2))
+    assertSameWarehouse(crashed, clean)
   }
 }
