@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Bucketed-table maintenance (SURVEY.md §4): the storage-side shuffle
   * eliminator for the engine's recurring join/dedup keys.
@@ -81,12 +82,12 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Run two INDEPENDENT store side effects as concurrent driver-thread
-    * jobs (guide §2.6 — actions are only sequential because the driver
-    * calls them sequentially; the second write's tasks back-fill the
-    * executor slots the first one's tail leaves idle). Used for the
-    * store + count-delta double appends, whose crash contract is
-    * order-free by construction: the reconcile path
+  /** Run two INDEPENDENT side effects as concurrent driver-thread jobs
+    * and return both results (guide §2.6 — actions are only sequential
+    * because the driver calls them sequentially; the second job's tasks
+    * back-fill the executor slots the first one's tail leaves idle).
+    * Used for the store + count-delta double appends, whose crash
+    * contract is order-free by construction: the reconcile path
     * ([[Reconcile.appendExact]]) converges store and counts from ANY
     * committed subset via a touched-key recount, so which append
     * commits first never mattered. Both thunks run on a pool of their
@@ -94,7 +95,7 @@ object Bucketing {
     * and are awaited; the first failure propagates after both have
     * settled, carrying the second as suppressed (a half-committed pair
     * is exactly the state the intent marker already brackets). */
-  def inParallel(a: => Unit, b: => Unit): Unit = {
+  def inParallel[A, B](a: => A, b: => B): (A, B) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     import scala.util.{Failure, Try}
@@ -104,7 +105,7 @@ object Bucketing {
       val (fa, fb) = (Future(a), Future(b))
       (Try(Await.result(fa, Duration.Inf)), Try(Await.result(fb, Duration.Inf))) match {
         case (Failure(ea), Failure(eb)) => ea.addSuppressed(eb); throw ea
-        case (ra, rb) => ra.get; rb.get
+        case (ra, rb) => (ra.get, rb.get)
       }
     } finally pool.shutdown()
   }
@@ -187,27 +188,73 @@ object Bucketing {
     * under-compacts when they are large; triggering on the actual file
     * decay pays the rewrite exactly when the scan-side cost (open-file
     * overhead, lost in-bucket Sort elision) has accrued. */
-  def needsCompaction(spark: SparkSession, table: String, buckets: Int,
-                      maxFilesPerBucket: Int): Boolean = {
+  private def needsCompaction(spark: SparkSession, table: String,
+                              buckets: Int, maxFilesPerBucket: Int): Boolean = {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
     dataFileCount(spark, table) > buckets * maxFilesPerBucket
   }
 
-  /** Shared in-loop maintenance cadence for the streaming ingest loops
-    * (signature / vector / fingerprint stores — one policy, one place):
-    * `compactEvery = N` compacts unconditionally every N batches (the
-    * coverage cadence the checked streaming queries use at N = 1);
-    * otherwise `maxFilesPerBucket = M > 0` compacts only when the
-    * store's measured file decay passes the bound (the PRODUCTION
-    * cadence — [[needsCompaction]]). Runs AFTER the batch's ledger
-    * record, outside the exactly-once contract: compaction is
-    * best-effort, idempotent under replay, and a crash inside its
-    * staging swap self-heals at the next maintenance/ingest entry
-    * ([[recoverSwap]]). */
-  def maintainInLoop(batchId: Long, compactEvery: Int, maxFilesPerBucket: Int)
-                    (compact: => Unit)(compactIfNeeded: Int => Unit): Unit =
+  /** Run a store's `compact` only when `table` has decayed past
+    * `maxFilesPerBucket` appended generations ([[needsCompaction]]) —
+    * the production cadence every store family shares. Entry completes
+    * a swap a crashed compaction stranded ([[recoverSwap]]), so the
+    * decay is measured on the live table. Returns whether `compact`
+    * ran. */
+  def compactIfNeeded(spark: SparkSession, table: String, buckets: Int,
+                      maxFilesPerBucket: Int)(compact: => Unit): Boolean = {
+    recoverSwap(spark, table)
+    val due = needsCompaction(spark, table, buckets, maxFilesPerBucket)
+    if (due) compact
+    due
+  }
+
+  /** Shared in-loop maintenance cadence for the store families' ingest
+    * loops (one policy, one place): `compactEvery = N` compacts
+    * unconditionally every N batches — each compaction is a FULL-STORE
+    * rewrite, so a production loop wants N ≫ 1; the checked streaming
+    * queries' N = 1 is a coverage choice (dedup must survive the
+    * compaction boundary on every batch). Otherwise `maxFilesPerBucket =
+    * M > 0` compacts only when the store's measured file decay passes
+    * the bound ([[compactIfNeeded]] — the PRODUCTION cadence). Runs
+    * AFTER the batch's ledger record, outside the exactly-once
+    * contract: compaction is best-effort, idempotent under replay, and
+    * a crash inside its staging swap self-heals at the next
+    * maintenance/ingest entry ([[recoverSwap]]). The batch's ingest
+    * runs first and heals everything else a family keeps next to its
+    * store before the decay check — the count side tables' swaps
+    * ([[graft.ext.IncrementalDedup.ingestBatch]],
+    * [[graft.ext.VectorStore.ingestBatchWith]]) and a crashed
+    * recluster ([[graft.ext.VectorStore.ingestBatchTrained]]). */
+  def maintainInLoop(spark: SparkSession, table: String, buckets: Int,
+                     batchId: Long, compactEvery: Int,
+                     maxFilesPerBucket: Int)(compact: => Unit): Unit =
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) compact
-    else if (maxFilesPerBucket > 0) compactIfNeeded(maxFilesPerBucket)
+    else if (maxFilesPerBucket > 0)
+      compactIfNeeded(spark, table, buckets, maxFilesPerBucket)(compact)
+
+  /** The continuous-ingest loop every store family runs: drain `source`
+    * with `Trigger.AvailableNow` (process what is pending, stop) under
+    * the checkpoint at `checkpoint`; each micro-batch runs
+    * `ingest(batch, batchId)` — the family's ledgered, exactly-once
+    * batch — then [[maintainInLoop]] on each `(table, compact)` of
+    * `stores` in order, with the micro-batch's session (the session
+    * that must see the compacted tables' refreshed file listings). */
+  def streamLoop(source: DataFrame, checkpoint: String, buckets: Int,
+                 compactEvery: Int, maxFilesPerBucket: Int)
+                (ingest: (DataFrame, Long) => Unit)
+                (stores: (String, SparkSession => Unit)*): StreamingQuery =
+    source.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        ingest(batch, batchId)
+        val spark = batch.sparkSession
+        stores.foreach { case (table, compact) =>
+          maintainInLoop(spark, table, buckets, batchId, compactEvery,
+            maxFilesPerBucket)(compact(spark))
+        }
+      }
+      .start()
 
   /** Compact an accumulated (much-appended) bucketed table back to ONE
     * file per bucket, restoring the scan's per-bucket sortedness and

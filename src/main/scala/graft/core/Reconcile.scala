@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Crash-recovery append for the incremental-store ingest loops — the
@@ -33,6 +33,14 @@ import org.apache.spark.sql.functions._
   * would see the shard's own appended rows: two surviving near-dup
   * siblings would each match the other's store row and flip from kept
   * to dropped.
+  *
+  * The COUNT-DELTA stores (LM model, quality classifier, data card) have
+  * no verdicts and no per-row identity to anti-join on: their rows are
+  * summed counters tagged with the `batch_id` that appended them (−1 for
+  * the base build and for folded rows). Their replay repair is
+  * [[appendDeltas]] — drop the batch's tagged rows, re-append — and
+  * their compaction is [[compactDeltas]], which keeps a dangling
+  * batch's rows tagged so that repair can still find them.
   */
 object Reconcile {
 
@@ -81,5 +89,63 @@ object Reconcile {
         .filter(col(countCol) =!= 0L)
       Bucketing.appendBucketed(corrective, counts, keys, buckets)
     }
+  }
+
+  /** One exactly-once micro-batch of a count-delta store `table`
+    * (bucketed on `keys`), whose `append` lands the batch's delta rows
+    * tagged `batch_id = batchId`. Two-phase ([[IngestLedger]]): a
+    * committed batch skips; a batch that crashed mid-append (intent
+    * without commit) first rewrites the store without its tagged rows
+    * — a partial append's stragglers included — and re-appends
+    * deterministically (same slice, same counts; an O(store) rewrite
+    * paid only on the rare crash-repair path, never per batch).
+    * Negative ids are refused: they are the base-build/folded
+    * sentinel, and a repair keyed on one would delete folded rows. */
+  def appendDeltas(spark: SparkSession, table: String, keys: Seq[String],
+                   buckets: Int, batchId: Long)(append: => Unit): Unit = {
+    require(batchId >= 0,
+      s"ingest into '$table': batchId must be >= 0 (got $batchId) — " +
+        "negative ids are the base-build/compacted sentinel and a repair " +
+        "keyed on one would delete the folded rows")
+    Bucketing.recoverSwap(spark, table)
+    if (IngestLedger.applied(spark, table, batchId)) return
+    if (IngestLedger.intended(spark, table, batchId))
+      Bucketing.replaceBucketed(
+        spark.table(table).filter(col("batch_id") =!= batchId),
+        table, keys, buckets)
+    else IngestLedger.intent(spark, table, batchId)
+    append
+    IngestLedger.record(spark, table, batchId)
+  }
+
+  /** Compact a count-delta store: one row per `group` with each `sums`
+    * column summed, tagged with the −1 "folded" sentinel, one file per
+    * bucket ([[Bucketing.compact]]); then prune the ledger. Rows of a
+    * DANGLING batch — intent marker written, commit record never
+    * reached, a crash mid-append whose replay has not run yet — pass
+    * through UNFOLDED, still carrying their batch id: [[appendDeltas]]
+    * removes a partial append by `batch_id`, and folding those rows
+    * into the sentinel would strand them where the repair cannot see
+    * them, double-counting the batch after its re-append. (The in-loop
+    * path compacts strictly after the commit record, so it never has a
+    * dangling own batch — this guards the public entry points against
+    * compaction interleaved before a replay.) */
+  def compactDeltas(spark: SparkSession, table: String, keys: Seq[String],
+                    buckets: Int, group: Seq[String],
+                    sums: Seq[String]): Unit = {
+    val dangling = IngestLedger.danglingIntents(spark, table)
+    val isDangling = col("batch_id").isin(dangling: _*)
+    val cols = (group ++ sums :+ "batch_id").map(col)
+    val totals = sums.map(c => sum(col(c)).as(c))
+    Bucketing.compact(spark, table, keys, buckets,
+      prepare = df => {
+        val fold = (if (dangling.isEmpty) df else df.filter(!isDangling))
+          .groupBy(group.map(col): _*).agg(totals.head, totals.tail: _*)
+          .withColumn("batch_id", lit(-1L))
+          .select(cols: _*)
+        if (dangling.isEmpty) fold
+        else fold.unionByName(df.filter(isDangling).select(cols: _*))
+      })
+    IngestLedger.prune(spark, table)
   }
 }

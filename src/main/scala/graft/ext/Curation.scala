@@ -621,7 +621,14 @@ object Curation {
     * consumers and are checkpointed once (measured 3.2 s → the
     * sum-of-stages cost at sf0.1; at 100 TB the staged corpus is the
     * natural inter-stage artifact, exactly as the incremental loop
-    * persists per-stage verdicts). */
+    * persists per-stage verdicts).
+    *
+    * Executor-loss trade-off: those checkpoints (the stage-2 cleaned
+    * corpus above all) are `localCheckpoint(true)` — an O(corpus)
+    * executor-local pin with truncated lineage. Losing an executor that
+    * holds some of its blocks FAILS the job instead of recomputing
+    * them from lineage; a deployment on preemptible executors wants a
+    * reliable `checkpoint()` or a staged parquet write per stage. */
   def batchRecipe(docs: DataFrame, idCol: String, textCol: String,
                   langCol: String, sourceCol: String,
                   emb: DataFrame, embCol: String,
@@ -696,6 +703,8 @@ object Curation {
     val s2 = docs.select(col(idCol), col(langCol), col(sourceCol))
       .join(cleaned, Seq(idCol))
       .select(col(idCol), col(langCol), col(sourceCol), col("__clean"))
+      // O(corpus) executor-local pin: executor loss fails the job rather
+      // than recomputing (the batchRecipe scaladoc trade-off)
       .localCheckpoint(true)
     // stage 3: exact dedup on the cleaned text, min-id canonical keeps
     val canon = ExactDedup.dedup(s2, idCol, "__clean")

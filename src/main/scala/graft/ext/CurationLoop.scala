@@ -295,26 +295,13 @@ object CurationLoop {
                    outRoot: String, checkpoint: String,
                    compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestShard(batch, batchId, idCol, textCol, embCol, stores,
-          params, outRoot)
-        val s = batch.sparkSession
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)({
-          ExactDedup.compactStore(s, stores.fpTable, stores.buckets)
-          IncrementalDedup.compactStore(s, stores.sigTable, stores.buckets)
-          VectorStore.compactStore(s, stores.vecTable, stores.buckets)
-        })({ m =>
-          ExactDedup.compactStoreIfNeeded(s, stores.fpTable,
-            stores.buckets, m)
-          IncrementalDedup.compactStoreIfNeeded(s, stores.sigTable,
-            stores.buckets, m)
-          VectorStore.compactStoreIfNeeded(s, stores.vecTable,
-            stores.buckets, m)
-          ()
-        })
-      }
-      .start()
+    Bucketing.streamLoop(shards, checkpoint, stores.buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestShard(_, _, idCol, textCol, embCol, stores, params, outRoot))(
+      (stores.fpTable, ExactDedup.compactStore(_, stores.fpTable,
+        stores.buckets)),
+      (stores.sigTable, IncrementalDedup.compactStore(_, stores.sigTable,
+        stores.buckets)),
+      (stores.vecTable, VectorStore.compactStore(_, stores.vecTable,
+        stores.buckets)))
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.{Bucketing, IngestLedger, Reconcile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -281,74 +281,29 @@ object DataCard {
   }
 
   /** Collapse accumulated delta generations to one (source, lang) row
-    * and one file per bucket; folded rows carry the −1 sentinel. Rows
-    * of a DANGLING batch (intent without commit record — a crash
-    * mid-append awaiting replay) pass through UNFOLDED, still tagged:
-    * the crash repair removes a partial append by `batch_id` filter
-    * ([[ingestCardBatch]]), so folding those counters into the
-    * sentinel would double-count the batch after its re-append (the
-    * [[LmScore.compactModelStore]] guard — count folds, unlike the
+    * and one file per bucket; folded rows carry the −1 sentinel, and a
+    * dangling batch's rows pass through still tagged so its crash
+    * repair stays exact — the shared count-delta fold
+    * ([[graft.core.Reconcile.compactDeltas]]; count folds, unlike the
     * dedup stores' min-id folds, are not idempotent). */
   def compactCardStore(spark: SparkSession, table: String, buckets: Int,
                        langCol: String = "lang",
-                       sourceCol: String = "source"): Unit = {
-    val dangling = IngestLedger.danglingIntents(spark, table)
-    Bucketing.compact(spark, table, Seq(sourceCol), buckets,
-      prepare = df => {
-        val fold = (if (dangling.isEmpty) df
-          else df.filter(!col("batch_id").isin(dangling: _*)))
-          .groupBy(sourceCol, langCol)
-          .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"),
-            sum("score_sum_q").as("score_sum_q"))
-          .withColumn("batch_id", lit(-1L))
-          .select(sourceCol, langCol, "n_docs", "n_tokens", "score_sum_q",
-            "batch_id")
-        if (dangling.isEmpty) fold
-        else fold.unionByName(df.filter(col("batch_id").isin(dangling: _*))
-          .select(sourceCol, langCol, "n_docs", "n_tokens", "score_sum_q",
-            "batch_id"))
-      })
-    IngestLedger.prune(spark, table)
-  }
+                       sourceCol: String = "source"): Unit =
+    Reconcile.compactDeltas(spark, table, Seq(sourceCol), buckets,
+      group = Seq(sourceCol, langCol),
+      sums = Seq("n_docs", "n_tokens", "score_sum_q"))
 
-  /** [[compactCardStore]] behind the files-per-bucket decay trigger. */
-  def compactCardStoreIfNeeded(spark: SparkSession, table: String,
-                               buckets: Int, maxFilesPerBucket: Int,
-                               langCol: String = "lang",
-                               sourceCol: String = "source"): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactCardStore(spark, table, buckets, langCol, sourceCol)
-    due
-  }
-
-  /** One exactly-once micro-batch ([[LmScore.ingestModelBatch]]'s
-    * pattern): committed batches skip; a batch that crashed mid-append
-    * repairs exactly by dropping its tagged delta rows and
-    * re-appending deterministically. */
+  /** One exactly-once micro-batch — the shared count-delta protocol
+    * ([[graft.core.Reconcile.appendDeltas]]): committed batches skip; a
+    * batch that crashed mid-append repairs exactly by dropping its
+    * tagged delta rows and re-appending deterministically. */
   def ingestCardBatch(batch: DataFrame, batchId: Long,
                       idCol: String, textCol: String,
                       langCol: String, sourceCol: String,
-                      table: String, buckets: Int): Unit = {
-    require(batchId >= 0,
-      s"ingestCardBatch: batchId must be >= 0 (got $batchId) — negative " +
-        "ids are the base-build/compacted sentinel and a repair keyed on " +
-        "one would delete the folded rows")
-    val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (IngestLedger.intended(spark, table, batchId)) {
-      Bucketing.replaceBucketed(
-        spark.table(table).filter(col("batch_id") =!= batchId),
-        table, Seq(sourceCol), buckets)
-    } else {
-      IngestLedger.intent(spark, table, batchId)
-    }
-    appendCardDeltas(batch, idCol, textCol, langCol, sourceCol,
-      table, buckets, batchId)
-    IngestLedger.record(spark, table, batchId)
-  }
+                      table: String, buckets: Int): Unit =
+    Reconcile.appendDeltas(batch.sparkSession, table, Seq(sourceCol),
+      buckets, batchId)(appendCardDeltas(batch, idCol, textCol, langCol,
+      sourceCol, table, buckets, batchId))
 
   /** The CONTINUOUS form: every micro-batch's counters land
     * exactly-once; in-loop maintenance on the shared cadence policy. */
@@ -357,17 +312,9 @@ object DataCard {
                        table: String, buckets: Int, checkpoint: String,
                        compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestCardBatch(batch, batchId, idCol, textCol, langCol,
-          sourceCol, table, buckets)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactCardStore(batch.sparkSession, table, buckets, langCol,
-            sourceCol))(
-          m => compactCardStoreIfNeeded(batch.sparkSession, table,
-            buckets, m, langCol, sourceCol))
-      }
-      .start()
+    Bucketing.streamLoop(shards, checkpoint, buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestCardBatch(_, _, idCol, textCol, langCol, sourceCol, table,
+        buckets))(
+      (table, compactCardStore(_, table, buckets, langCol, sourceCol)))
 }

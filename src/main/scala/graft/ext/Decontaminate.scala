@@ -525,45 +525,22 @@ object Decontaminate {
     graft.core.IngestLedger.prune(spark, table)
   }
 
-  /** [[compactBenchmarkStore]] behind the files-per-bucket decay
-    * trigger — the production cadence. Returns whether a compaction
-    * ran. */
-  def compactBenchmarkStoreIfNeeded(spark: SparkSession, table: String,
-                                    buckets: Int,
-                                    maxFilesPerBucket: Int): Boolean = {
-    graft.core.Bucketing.recoverSwap(spark, table)
-    val due = graft.core.Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactBenchmarkStore(spark, table, buckets)
-    due
-  }
-
   /** The CONTINUOUS form — eval suites arrive as a stream of doc
     * micro-batches (a new benchmark lands, the store grows, every later
     * training shard is checked against the union), with in-loop
     * maintenance on the shared cadence policy
-    * ([[graft.core.Bucketing.maintainInLoop]]). Completes the
-    * batch + streamed ingest symmetry the other four stores already
-    * have. `foreachBatch` is at-least-once; [[ingestBenchmarkBatch]]'s
+    * ([[graft.core.Bucketing.streamLoop]]). `foreachBatch` is
+    * at-least-once; [[ingestBenchmarkBatch]]'s
     * ledger + the append's own idempotence make it exactly-once. */
   def streamIngestBenchmark(shards: DataFrame, textCol: String,
                             table: String, buckets: Int, checkpoint: String,
                             compactEvery: Int = 0, maxFilesPerBucket: Int = 0,
                             maxItemsPerBloom: Long = MaxBloomItems)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBenchmarkBatch(batch, batchId, textCol, table, buckets,
-          maxItemsPerBloom)
-        graft.core.Bucketing.maintainInLoop(batchId, compactEvery,
-          maxFilesPerBucket)(
-          compactBenchmarkStore(batch.sparkSession, table, buckets))(
-          m => { compactBenchmarkStoreIfNeeded(batch.sparkSession, table,
-            buckets, m); () })
-      }
-      .start()
+    graft.core.Bucketing.streamLoop(shards, checkpoint, buckets,
+        compactEvery, maxFilesPerBucket)(
+      ingestBenchmarkBatch(_, _, textCol, table, buckets, maxItemsPerBloom))(
+      (table, compactBenchmarkStore(_, table, buckets)))
 
   /** Decontaminate a TRAINING shard against a persisted benchmark store
     * (written by [[writeBenchmarkStore]]) — identical results to

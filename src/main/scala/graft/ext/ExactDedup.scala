@@ -152,17 +152,6 @@ object ExactDedup {
     IngestLedger.prune(spark, table)
   }
 
-  /** [[compactStore]] behind the files-per-bucket decay trigger
-    * ([[graft.core.Bucketing.needsCompaction]]) — the production
-    * cadence. Returns whether a compaction ran. */
-  def compactStoreIfNeeded(spark: SparkSession, table: String, buckets: Int,
-                           maxFilesPerBucket: Int): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets, maxFilesPerBucket)
-    if (due) compactStore(spark, table, buckets)
-    due
-  }
-
   /** The CONTINUOUS-ingest form ([[IncrementalDedup.streamIngest]]'s
     * exact-fingerprint twin, and in production the loop that runs
     * AHEAD of it): each micro-batch is a shard — dedup it against the
@@ -178,22 +167,17 @@ object ExactDedup {
     * own appended fps and flip intra-shard twins from kept to
     * dropped). In-loop compaction: `compactEvery = N` (fixed cadence;
     * checked configs use 1 for coverage) or `maxFilesPerBucket = M`
-    * (the production decay trigger — [[compactStoreIfNeeded]]). */
+    * (the production decay trigger) — the shared
+    * [[graft.core.Bucketing.streamLoop]]. */
   def streamIngest(newDocs: DataFrame, idCol: String, textCol: String,
                    table: String, buckets: Int,
                    outPath: String, checkpoint: String,
                    compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, idCol, textCol, table, buckets, outPath)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactStore(batch.sparkSession, table, buckets))(
-          m => compactStoreIfNeeded(batch.sparkSession, table, buckets, m))
-      }
-      .start()
+    Bucketing.streamLoop(newDocs, checkpoint, buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestBatch(_, _, idCol, textCol, table, buckets, outPath))(
+      (table, compactStore(_, table, buckets)))
 
   /** One micro-batch of [[streamIngest]] — also the non-streaming entry
     * point for a caller-driven loop. Verdicts are eagerly materialized

@@ -211,48 +211,14 @@ object IncrementalDedup {
     IngestLedger.prune(spark, table)
   }
 
-  /** [[compactStore]] behind the FILES-PER-BUCKET trigger
-    * ([[graft.core.Bucketing.needsCompaction]]): compact only once the
-    * store has accumulated more than `maxFilesPerBucket` appended
-    * generations — the production cadence (pays the O(store) rewrite
-    * exactly when the scan-side decay has accrued, independent of shard
-    * sizing). Returns whether a compaction ran. */
-  def compactStoreIfNeeded(spark: SparkSession, table: String, buckets: Int,
-                           maxFilesPerBucket: Int): Boolean = {
-    // heal BOTH swap windows: a stranded COUNTS swap would otherwise
-    // persist until the store itself came due, failing any capped
-    // reader on a missing side table in the meantime
-    Bucketing.recoverSwap(spark, table)
-    Bucketing.recoverSwap(spark, countsTable(table))
-    val due = Bucketing.needsCompaction(spark, table, buckets, maxFilesPerBucket)
-    if (due) compactStore(spark, table, buckets)
-    due
-  }
-
-  /** Deduplicate a NEW shard against a persisted signature `store`
-    * (a table written by [[writeSignatureStore]] with the SAME
-    * `shingleN`/`numHashes`/`nBands`).
-    *
-    * Candidate pairs come from the `(band, band_key)` equi-join of the
-    * shard's banded signatures against the store (the store side reads
-    * bucketed, shuffle-free; the merge hint pins the sort-merge
-    * strategy so a small test-scale shard cannot silently broadcast and
-    * bypass the layout being proven — [[graft.core.Upsert.mergeBucketed]]'s
-    * rationale). A pair is a duplicate when its signature agreement
-    * `n_match/numHashes ≥ minJaccard` — the same estimate as
-    * [[MinHash.nearDupPairs]], compared in exact integers.
-    *
-    * @return one row per new-shard doc: `(id, kept, n_store_matches,
-    *         dup_of)` — `kept` when no store doc matched, `dup_of` the
-    *         smallest matching store id (null when kept). */
   /** The continuous-ingest form of the ingest loop: each micro-batch is
     * a shard — dedup it against the signature store, append the per-doc
     * verdicts to `outPath`, append the SURVIVORS' signatures to the
     * store, so the next micro-batch dedups against everything ingested
-    * so far. `Trigger.AvailableNow` + `maxFilesPerTrigger` on the file
-    * source make "one landed file = one shard" (the reference's
-    * operational shape — process what's pending, exactly once per file,
-    * stop).
+    * so far. The shared loop ([[graft.core.Bucketing.streamLoop]])
+    * drains what is pending and stops; with `maxFilesPerTrigger = 1` on
+    * the file source, one landed file is one shard (the reference's
+    * operational shape — exactly once per file).
     *
     * The loop is IDEMPOTENT under `foreachBatch`'s at-least-once
     * replay: verdicts land partitioned by `batch_id` with dynamic
@@ -279,38 +245,11 @@ object IncrementalDedup {
                    maxBandDocs: Int = 0, compactEvery: Int = 0,
                    maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newDocs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, idCol, textCol, shingleN, numHashes,
-          nBands, table, buckets, minJaccard, outPath, maxBandDocs)
-        // in-loop maintenance (compactEvery > 0): every N batches,
-        // collapse the store's accumulated per-bucket shard files and
-        // count deltas back to one file per bucket / one row per key —
-        // without it, a long-running loop degrades toward
-        // thousands-of-files-per-bucket scans. Runs AFTER the batch's
-        // ledger record: compaction is best-effort maintenance outside
-        // the exactly-once contract, and replaying a skipped batch may
-        // at worst re-compact, which is idempotent. A crash BEFORE the
-        // staging swap leaves the original store intact; a crash INSIDE
-        // the swap's drop→rename window strands a state the next entry
-        // of any maintenance/ingest path completes automatically
-        // (Bucketing.recoverSwap).
-        //
-        // Sizing: each compaction is a FULL-STORE rewrite — O(store)
-        // work per trigger — so a production loop wants N ≫ 1, sized so
-        // one rewrite amortizes over many O(shard) appends. x37's
-        // checked `compactEvery = 1` is a COVERAGE configuration (prove
-        // dedup survives the compaction boundary on every batch), not a
-        // production template. `maxFilesPerBucket` is the PRODUCTION
-        // cadence: trigger on the store's measured file decay
-        // (compactStoreIfNeeded), independent of shard sizing.
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactStore(batch.sparkSession, table, buckets))(
-          m => compactStoreIfNeeded(batch.sparkSession, table, buckets, m))
-      }
-      .start()
+    Bucketing.streamLoop(newDocs, checkpoint, buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestBatch(_, _, idCol, textCol, shingleN, numHashes, nBands, table,
+        buckets, minJaccard, outPath, maxBandDocs))(
+      (table, compactStore(_, table, buckets)))
 
   /** One micro-batch of [[streamIngest]] — also the non-streaming entry
     * point for callers driving the ingest loop themselves (one call per
@@ -376,7 +315,20 @@ object IncrementalDedup {
     } finally banded.unpersist()
   }
 
-  /** `maxBandDocs > 0` engages the hot-key cap: band keys carrying MORE
+  /** Deduplicate a NEW shard against a persisted signature `store`
+    * (a table written by [[writeSignatureStore]] with the SAME
+    * `shingleN`/`numHashes`/`nBands`).
+    *
+    * Candidate pairs come from the `(band, band_key)` equi-join of the
+    * shard's banded signatures against the store (the store side reads
+    * bucketed, shuffle-free; the merge hint pins the sort-merge
+    * strategy so a small test-scale shard cannot silently broadcast and
+    * bypass the layout being proven — [[graft.core.Upsert.mergeBucketed]]'s
+    * rationale). A pair is a duplicate when its signature agreement
+    * `n_match/numHashes ≥ minJaccard` — the same estimate as
+    * [[MinHash.nearDupPairs]], compared in exact integers.
+    *
+    * `maxBandDocs > 0` engages the hot-key cap: band keys carrying MORE
     * than that many STORE docs (per `keyCounts` — the [[countsTable]]
     * side table, required when the cap is on) are excluded from
     * candidate generation on BOTH join sides. A hot key (boilerplate)
@@ -385,7 +337,11 @@ object IncrementalDedup {
     * for the batch-side rationale. Both semi-joins are bucket-aligned
     * (counts and store share the bucket layout), so the store side
     * stays Exchange-free with the cap engaged (PlanSpec pins this).
-    * 0 (the default) disables the cap. */
+    * 0 (the default) disables the cap.
+    *
+    * @return one row per new-shard doc: `(id, kept, n_store_matches,
+    *         dup_of)` — `kept` when no store doc matched, `dup_of` the
+    *         smallest matching store id (null when kept). */
   def dedupAgainstStore(newDocs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int, numHashes: Int, nBands: Int,
                         store: DataFrame, minJaccard: Double,

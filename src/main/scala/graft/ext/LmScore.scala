@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.{Bucketing, IngestLedger, Reconcile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -446,45 +446,14 @@ object LmScore {
 
   /** Collapse accumulated delta generations to one `(n, fp)` row and
     * one file per bucket; compacted rows carry `batch_id = -1` (the
-    * "folded" sentinel). Rows of a DANGLING batch — intent marker
-    * written, commit record never reached (a crash mid-append whose
-    * replay has not run yet) — pass through UNFOLDED, still carrying
-    * their batch id: the crash repair removes a partial append by
-    * `batch_id` filter ([[ingestModelBatch]]), and folding those rows
-    * into the sentinel would strand them where the repair cannot see
-    * them, double-counting the batch after its re-append. (The
-    * in-loop path compacts strictly after the commit record, so it
-    * never has a dangling own batch — this guards the PUBLIC entry
-    * points against compaction interleaved before a replay.) Ledger
-    * markers prune below the watermark. */
+    * "folded" sentinel), a dangling batch's rows pass through still
+    * tagged so its crash repair stays exact, and ledger markers prune
+    * below the watermark — the shared count-delta fold
+    * ([[graft.core.Reconcile.compactDeltas]]). */
   def compactModelStore(spark: SparkSession, table: String,
-                        buckets: Int): Unit = {
-    val dangling = IngestLedger.danglingIntents(spark, table)
-    Bucketing.compact(spark, table, Seq("fp"), buckets,
-      prepare = df => {
-        val fold = (if (dangling.isEmpty) df
-          else df.filter(!col("batch_id").isin(dangling: _*)))
-          .groupBy("n", "fp").agg(sum(col("c")).as("c"))
-          .withColumn("batch_id", lit(-1L))
-          .select("n", "fp", "c", "batch_id")
-        if (dangling.isEmpty) fold
-        else fold.unionByName(df.filter(col("batch_id").isin(dangling: _*))
-          .select("n", "fp", "c", "batch_id"))
-      })
-    IngestLedger.prune(spark, table)
-  }
-
-  /** [[compactModelStore]] behind the files-per-bucket decay trigger —
-    * the production cadence. Returns whether a compaction ran. */
-  def compactModelStoreIfNeeded(spark: SparkSession, table: String,
-                                buckets: Int,
-                                maxFilesPerBucket: Int): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactModelStore(spark, table, buckets)
-    due
-  }
+                        buckets: Int): Unit =
+    Reconcile.compactDeltas(spark, table, Seq("fp"), buckets,
+      group = Seq("n", "fp"), sums = Seq("c"))
 
   /** The CONTINUOUS form: each micro-batch is a new slice of the
     * reference corpus whose count deltas append exactly-once under the
@@ -495,47 +464,21 @@ object LmScore {
                         table: String, buckets: Int, checkpoint: String,
                         compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    refDocs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestModelBatch(batch, batchId, textCol, table, buckets)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactModelStore(batch.sparkSession, table, buckets))(
-          m => compactModelStoreIfNeeded(batch.sparkSession, table,
-            buckets, m))
-      }
-      .start()
+    Bucketing.streamLoop(refDocs, checkpoint, buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestModelBatch(_, _, textCol, table, buckets))(
+      (table, compactModelStore(_, table, buckets)))
 
   /** One micro-batch of [[streamIngestModel]] — also the non-streaming
     * entry point for a caller-driven loop that wants the ledger.
     * Replay of a batch that crashed mid-append converges EXACTLY: the
     * batch's delta rows are tagged with its id, so the repair rewrites
-    * the store without them (a partial append's stragglers included)
-    * and re-appends deterministically — an O(store) rewrite, paid only
-    * on the rare crash-repair path, never per batch. */
+    * the store without them and re-appends deterministically
+    * ([[graft.core.Reconcile.appendDeltas]]). */
   def ingestModelBatch(batch: DataFrame, batchId: Long, textCol: String,
-                       table: String, buckets: Int): Unit = {
-    require(batchId >= 0,
-      s"ingestModelBatch: batchId must be >= 0 (got $batchId) — negative " +
-        "ids are the base-build/compacted sentinel and a repair keyed on " +
-        "one would delete the folded rows")
-    val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (IngestLedger.intended(spark, table, batchId)) {
-      // a prior attempt crashed somewhere inside its append: the delta
-      // may have landed fully, partially, or not at all — drop whatever
-      // landed and re-append (deterministic: same slice, same counts)
-      Bucketing.replaceBucketed(
-        spark.table(table).filter(col("batch_id") =!= batchId),
-        table, Seq("fp"), buckets)
-    } else {
-      IngestLedger.intent(spark, table, batchId)
-    }
-    appendToModel(batch, textCol, table, buckets, batchId)
-    IngestLedger.record(spark, table, batchId)
-  }
+                       table: String, buckets: Int): Unit =
+    Reconcile.appendDeltas(batch.sparkSession, table, Seq("fp"), buckets,
+      batchId)(appendToModel(batch, textCol, table, buckets, batchId))
 
   /** PASSAGE-level quality cutting — the CCNet deployment grain: CCNet
     * scores and filters PARAGRAPHS, not pages, because a good page

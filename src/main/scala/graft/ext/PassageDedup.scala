@@ -174,7 +174,14 @@ object PassageDedup {
     * reassembly groups on doc id with the [[dedup]]
     * `array_sort(collect_list(struct))` idiom (those two carry the
     * passage text exactly as [[dedup]]'s rank/reassembly pair does —
-    * inherent to reassembling documents). */
+    * inherent to reassembling documents).
+    *
+    * Executor-loss trade-off: the passage table is pinned with
+    * `localCheckpoint(true)` — an O(corpus) executor-local pin (cached
+    * blocks, truncated lineage). Losing an executor that holds some of
+    * those blocks FAILS the job instead of recomputing them from
+    * lineage; a deployment on preemptible executors wants a reliable
+    * `checkpoint()` (or a staged parquet write) here instead. */
   def removeBoilerplate(docs: DataFrame, idCol: String, textCol: String,
                         chunkTokens: Int, minDocFreq: Int): DataFrame = {
     require(minDocFreq >= 2, s"minDocFreq must be >= 2, got $minDocFreq")

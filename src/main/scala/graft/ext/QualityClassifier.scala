@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Bucketing, IngestLedger}
+import graft.core.{Bucketing, IngestLedger, Reconcile}
 
 /** TRAINED discriminative quality classifier — the fastText-style
   * binary positive-corpus-vs-background scorer every published
@@ -233,90 +233,41 @@ object QualityClassifier {
       table, Seq("fp"), buckets)
 
   /** One exactly-once micro-batch of labeled training data — the
-    * [[LmScore.ingestModelBatch]] two-phase protocol verbatim (count
-    * deltas are NOT idempotent on replay, so a batch that crashed
-    * mid-append first drops its tagged rows — stragglers of the partial
-    * append included — then re-appends deterministically; the O(store)
-    * rewrite is paid only on the rare crash-repair path). */
+    * shared count-delta protocol ([[graft.core.Reconcile.appendDeltas]]):
+    * count deltas are NOT idempotent on replay, so a batch that crashed
+    * mid-append first drops its tagged rows, then re-appends
+    * deterministically. Refuses a store whose build never committed. */
   def ingestClassifierBatch(batch: DataFrame, batchId: Long,
                             labelCol: String, textCol: String,
                             table: String, buckets: Int): Unit = {
-    require(batchId >= 0,
-      s"ingestClassifierBatch: batchId must be >= 0 (got $batchId) — " +
-        "negative ids are the base-build/compacted sentinel and a repair " +
-        "keyed on one would delete the folded rows")
-    val spark = batch.sparkSession
-    Bucketing.recoverSwap(spark, table)
-    requireClassifierContract(spark, table)
-    if (IngestLedger.applied(spark, table, batchId)) return
-    if (IngestLedger.intended(spark, table, batchId)) {
-      Bucketing.replaceBucketed(
-        spark.table(table).filter(col("batch_id") =!= batchId),
-        table, Seq("fp"), buckets)
-    } else {
-      IngestLedger.intent(spark, table, batchId)
-    }
-    appendLabeled(batch, labelCol, textCol, table, buckets, batchId)
-    IngestLedger.record(spark, table, batchId)
+    requireClassifierContract(batch.sparkSession, table)
+    Reconcile.appendDeltas(batch.sparkSession, table, Seq("fp"), buckets,
+      batchId)(appendLabeled(batch, labelCol, textCol, table, buckets, batchId))
   }
 
   /** Collapse the store's delta generations to one row per (side, fp)
-    * and prune the ledger — the [[LmScore.compactModelStore]] fold with
-    * the classifier's grain, dangling-intent batches carried through
-    * unfolded so their crash repair stays exact. */
+    * and prune the ledger — the shared count-delta fold
+    * ([[graft.core.Reconcile.compactDeltas]]) at the classifier's
+    * grain, dangling-intent batches carried through unfolded so their
+    * crash repair stays exact. */
   def compactClassifierStore(spark: SparkSession, table: String,
-                             buckets: Int): Unit = {
-    val dangling = IngestLedger.danglingIntents(spark, table)
-    Bucketing.compact(spark, table, Seq("fp"), buckets,
-      prepare = df => {
-        val fold = (if (dangling.isEmpty) df
-          else df.filter(!col("batch_id").isin(dangling: _*)))
-          .groupBy("side", "fp").agg(sum(col("c")).as("c"))
-          .withColumn("batch_id", lit(-1L))
-          .select("side", "fp", "c", "batch_id")
-        if (dangling.isEmpty) fold
-        else fold.unionByName(df.filter(col("batch_id").isin(dangling: _*))
-          .select("side", "fp", "c", "batch_id"))
-      })
-    IngestLedger.prune(spark, table)
-  }
-
-  /** [[compactClassifierStore]] behind the files-per-bucket decay
-    * trigger — the production cadence. Returns whether a compaction
-    * ran. */
-  def compactClassifierStoreIfNeeded(spark: SparkSession, table: String,
-                                     buckets: Int,
-                                     maxFilesPerBucket: Int): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactClassifierStore(spark, table, buckets)
-    due
-  }
+                             buckets: Int): Unit =
+    Reconcile.compactDeltas(spark, table, Seq("fp"), buckets,
+      group = Seq("side", "fp"), sums = Seq("c"))
 
   /** The CONTINUOUS form — labeled training waves arrive as a stream
     * (a new curated source lands, a new crawl snapshot lands as
     * background) and the model grows under the exactly-once ledger;
-    * in-loop maintenance on the shared cadence policy. Completes the
-    * batch + streamed ingest symmetry of the engine's other five store
-    * families. */
+    * in-loop maintenance on the shared cadence policy. */
   def streamIngestClassifier(labeled: DataFrame, labelCol: String,
                              textCol: String, table: String, buckets: Int,
                              checkpoint: String, compactEvery: Int = 0,
                              maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    labeled.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestClassifierBatch(batch, batchId, labelCol, textCol, table,
-          buckets)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactClassifierStore(batch.sparkSession, table, buckets))(
-          m => { compactClassifierStoreIfNeeded(batch.sparkSession, table,
-            buckets, m); () })
-      }
-      .start()
+    Bucketing.streamLoop(labeled, checkpoint, buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestClassifierBatch(_, _, labelCol, textCol, table, buckets))(
+      (table, compactClassifierStore(_, table, buckets)))
 
   /** The model relation served FROM the store: delta generations
     * summed in-bucket (fp is the bucket key; the merge hint pins the

@@ -210,25 +210,6 @@ object VectorStore {
     IngestLedger.prune(spark, table)
   }
 
-  /** [[compactStore]] behind the FILES-PER-BUCKET trigger
-    * ([[graft.core.Bucketing.needsCompaction]]): compact only once the
-    * store has accumulated more than `maxFilesPerBucket` appended
-    * generations — the production cadence (pays the O(store) rewrite
-    * exactly when the scan-side decay has accrued, independent of shard
-    * sizing). Returns whether a compaction ran. */
-  def compactStoreIfNeeded(spark: SparkSession, table: String, buckets: Int,
-                           maxFilesPerBucket: Int): Boolean = {
-    // heal BOTH swap windows (a stranded counts swap would otherwise
-    // persist until the store itself came due) and any crashed
-    // recluster before measuring decay
-    Bucketing.recoverSwap(spark, table)
-    Bucketing.recoverSwap(spark, countsTable(table))
-    recoverRecluster(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets, maxFilesPerBucket)
-    if (due) compactStore(spark, table, buckets)
-    due
-  }
-
   /** Path of the recluster-in-progress marker — the [[graft.core.IngestLedger]]
     * dir convention applied to the one maintenance pass that is not
     * single-table-atomic: written (with the pass's parameters) BEFORE
@@ -287,8 +268,8 @@ object VectorStore {
     * across its tables, but the whole span is covered by an INTENT
     * MARKER carrying the pass's parameters: a crash anywhere between
     * the codebook overwrite and the counts rewrite leaves the marker in
-    * place, and [[ingestBatchTrained]] (so both resumed loops) and
-    * [[compactStoreIfNeeded]] call [[recoverRecluster]] at entry —
+    * place, and [[ingestBatchTrained]] (so every resumed trained loop)
+    * calls [[recoverRecluster]] at entry —
     * the pass re-runs deterministically (same vectors → same codebook)
     * instead of silently probing a cell space the store rows were never
     * assigned with (IngestRecoverySpec drives the crash window through
@@ -341,10 +322,10 @@ object VectorStore {
     * `compactEvery = 1` is a COVERAGE configuration — prove dedup
     * survives the compaction boundary on every batch — not a production
     * template). `maxFilesPerBucket = M` is the PRODUCTION trigger
-    * ([[compactStoreIfNeeded]]): compact only when the store's actual
-    * file decay passes M appended generations — pays the rewrite
-    * exactly when the scan-side cost has accrued, independent of shard
-    * sizing.
+    * ([[graft.core.Bucketing.compactIfNeeded]]): compact only when the
+    * store's actual file decay passes M appended generations — pays the
+    * rewrite exactly when the scan-side cost has accrued, independent of
+    * shard sizing.
     *
     * Upgrade note (pre-two-phase ledgers): before resuming a loop whose
     * previous run predates the ledger's INTENT markers and crashed
@@ -358,26 +339,11 @@ object VectorStore {
                    maxCellVecs: Long = 0L, compactEvery: Int = 0,
                    maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newVecs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, idCol, embCol, table, buckets,
-          minCosine, nCentroids, nProbe, dim, seedOffset, outPath,
-          maxCellVecs)
-        // in-loop maintenance, same contract as
-        // [[IncrementalDedup.streamIngest]]: best-effort compaction
-        // AFTER the batch's ledger record, outside the exactly-once
-        // contract, idempotent under replay. A crash before the swap
-        // leaves the original store intact; a crash INSIDE the swap's
-        // drop→rename window strands a state the next entry of any
-        // maintenance/ingest path completes automatically
-        // (Bucketing.recoverSwap).
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactStore(batch.sparkSession, table, buckets))(
-          m => compactStoreIfNeeded(batch.sparkSession, table, buckets, m))
-      }
-      .start()
+    Bucketing.streamLoop(newVecs, checkpoint, buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestBatch(_, _, idCol, embCol, table, buckets, minCosine, nCentroids,
+        nProbe, dim, seedOffset, outPath, maxCellVecs))(
+      (table, compactStore(_, table, buckets)))
 
   /** [[streamIngest]] over a TRAINED store (written by
     * [[writeVectorStoreTrained]] or converted by [[recluster]]): each
@@ -393,17 +359,11 @@ object VectorStore {
                           maxCellVecs: Long = 0L, compactEvery: Int = 0,
                           maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    newVecs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchTrained(batch, batchId, idCol, embCol, table, buckets,
-          minCosine, nProbe, outPath, maxCellVecs)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactStore(batch.sparkSession, table, buckets))(
-          m => compactStoreIfNeeded(batch.sparkSession, table, buckets, m))
-      }
-      .start()
+    Bucketing.streamLoop(newVecs, checkpoint, buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestBatchTrained(_, _, idCol, embCol, table, buckets, minCosine,
+        nProbe, outPath, maxCellVecs))(
+      (table, compactStore(_, table, buckets)))
 
   /** One micro-batch of [[streamIngest]] — also the non-streaming entry
     * point for a caller-driven ingest loop (LCG codebook). */

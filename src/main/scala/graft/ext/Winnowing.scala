@@ -237,17 +237,6 @@ object Winnowing {
     IngestLedger.prune(spark, table)
   }
 
-  /** [[compactWinnowStore]] behind the files-per-bucket decay trigger. */
-  def compactWinnowStoreIfNeeded(spark: SparkSession, table: String,
-                                 buckets: Int,
-                                 maxFilesPerBucket: Int): Boolean = {
-    Bucketing.recoverSwap(spark, table)
-    val due = Bucketing.needsCompaction(spark, table, buckets,
-      maxFilesPerBucket)
-    if (due) compactWinnowStore(spark, table, buckets)
-    due
-  }
-
   /** One exactly-once ingest micro-batch: a committed batch skips; a
     * batch that crashed mid-append re-appends — the pair grain makes
     * the replay IDEMPOTENT (duplicate (fp, doc) rows collapse at every
@@ -273,17 +262,10 @@ object Winnowing {
                          table: String, buckets: Int, checkpoint: String,
                          compactEvery: Int = 0, maxFilesPerBucket: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestWinnowBatch(batch, batchId, idCol, textCol, table, buckets)
-        Bucketing.maintainInLoop(batchId, compactEvery, maxFilesPerBucket)(
-          compactWinnowStore(batch.sparkSession, table, buckets))(
-          m => compactWinnowStoreIfNeeded(batch.sparkSession, table,
-            buckets, m))
-      }
-      .start()
+    Bucketing.streamLoop(shards, checkpoint, buckets, compactEvery,
+        maxFilesPerBucket)(
+      ingestWinnowBatch(_, _, idCol, textCol, table, buckets))(
+      (table, compactWinnowStore(_, table, buckets)))
 
   /** WINNOW-CLUSTER DEDUP — the MOSS pipeline's keep/drop resolution:
     * [[overlapPairs]]' candidate graph contracted to connected

@@ -34,22 +34,30 @@ object EodCsvSource {
   val keyFieldsMissing: org.apache.spark.sql.Column =
     col("trade_date").isNull || col("symbol").isNull
 
+  /** The bronze CSV format: header row skipped, `NULL` read as null,
+    * PERMISSIVE casts (an unparseable cell becomes null). Applied with
+    * [[graft.schema.Schemas.bronzeCsv]] by every bronze reader — this
+    * batch scan and [[graft.streaming.EodStream]]'s file stream. */
+  val csvOptions: Map[String, String] =
+    Map("header" -> "true", "nullValue" -> "NULL", "mode" -> "PERMISSIVE")
+
+  /** Add the RAW lineage columns: `_src_file` (the row's bronze file)
+    * and `_ingest_ts` (`ingestTs`, or the load's current timestamp). */
+  def withLineage(df: DataFrame,
+                  ingestTs: Option[java.sql.Timestamp]): DataFrame =
+    df.withColumn("_src_file", input_file_name())
+      .withColumn("_ingest_ts",
+        ingestTs.map(t => lit(t)).getOrElse(current_timestamp()))
+
   /** PERMISSIVE parse of one or more bronze CSV files (glob OK) into
     * RAW shape WITHOUT the skip filter — unparseable-key rows are
     * present with null keys, exactly `rows_parsed` grain. Use [[read]]
     * for the loaded rows; the difference is the skipped count. */
   def readParsed(spark: SparkSession, path: String,
-                 ingestTs: Option[java.sql.Timestamp] = None): DataFrame = {
-    val ts = ingestTs.map(t => lit(t)).getOrElse(current_timestamp())
-    spark.read
-      .schema(Schemas.bronzeCsv)
-      .option("header", "true")
-      .option("nullValue", "NULL")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-      .withColumn("_src_file", input_file_name())
-      .withColumn("_ingest_ts", ts)
-  }
+                 ingestTs: Option[java.sql.Timestamp] = None): DataFrame =
+    withLineage(
+      spark.read.schema(Schemas.bronzeCsv).options(csvOptions).csv(path),
+      ingestTs)
 
   /** Read one or more bronze CSV files (glob OK) into RAW shape.
     * `ingestTs` is injectable so tests and checked queries stay

@@ -6239,27 +6239,20 @@ FROM fin GROUP BY b ORDER BY batch_id"""))
       // the two tokenizer FITS are independent driver-sequential job
       // loops (BPE merge rounds, unigram EM rounds) — each leaves most
       // cores idle between its tiny jobs, so overlap them from two
-      // driver threads (guide §2.6, the Bucketing.inParallel rationale)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fMerges = Future {
+      // driver threads (guide §2.6); both settle before a failure of
+      // either propagates
+      val (merges, probs) = graft.core.Bucketing.inParallel(
         Bpe.fitMerges(docs, "text", numMerges = bpeK)
           .orderBy("step").collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-      }
-      val fProbs = Future {
+          .map(r => (r.getString(1), r.getString(2))).toSeq,
         graft.ext.Unigram.fit(docs, "text", vocabSize = ugV,
             maxPieceLen = ugL, rounds = ugR)
-          .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-      }
-      val merges = Await.result(fMerges, Duration.Inf)
+          .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap)
       val bpe = Bpe.fertilityCard(docs, "source", "text",
           Bpe.encodeWords(Bpe.wordSymbols(docs, "text"), merges))
         .select(col("source"), col("n_words"),
           col("n_pieces").as("bpe_pieces"),
           col("fertility").as("bpe_fertility"))
-      val probs = Await.result(fProbs, Duration.Inf)
       val ug = graft.ext.Unigram.fertilityCard(docs, "source", "text",
           probs, ugL)
         .select(col("source"), col("n_pieces").as("ug_pieces"),

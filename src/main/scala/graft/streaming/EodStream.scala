@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.EodPipeline
+import graft.ingest.EodCsvSource
 import graft.schema.Schemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,18 +38,13 @@ object EodStream {
             checkpointDir: String,
             ingestTs: Option[java.sql.Timestamp] = None,
             maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val ts = ingestTs.map(t => lit(t)).getOrElse(current_timestamp())
     val reader = spark.readStream
       .schema(Schemas.bronzeCsv)
-      .option("header", "true")
-      .option("nullValue", "NULL")
-      .option("mode", "PERMISSIVE")
+      .options(EodCsvSource.csvOptions)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.csv(bronzeGlob)
-      // same ON_ERROR=CONTINUE parity + lineage as EodCsvSource.read
-      .filter(col("trade_date").isNotNull && col("symbol").isNotNull)
-      .withColumn("_src_file", input_file_name())
-      .withColumn("_ingest_ts", ts)
+    // same ON_ERROR=CONTINUE parity + lineage as EodCsvSource.read
+    val stream = EodCsvSource.withLineage(
+      reader.csv(bronzeGlob).filter(!EodCsvSource.keyFieldsMissing), ingestTs)
 
     stream.writeStream
       .trigger(Trigger.AvailableNow())

@@ -524,6 +524,23 @@ class BucketingSpec extends SparkSpec {
     assert(e.getMessage == "a")
     assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("b"))
   }
+
+  test("inParallel returns both values; a failure surfaces only after its sibling finished") {
+    assert(graft.core.Bucketing.inParallel(21 * 2, "b") == ((42, "b")))
+    // either side may fail first: the other (slower) side still runs to
+    // completion before the failure reaches the caller
+    for (failFirst <- Seq(true, false)) {
+      val siblingDone = new java.util.concurrent.atomic.AtomicBoolean
+      def sibling: String = { Thread.sleep(300); siblingDone.set(true); "done" }
+      def failing: String = throw new IllegalStateException("boom")
+      val e = intercept[IllegalStateException] {
+        if (failFirst) graft.core.Bucketing.inParallel(failing, sibling)
+        else graft.core.Bucketing.inParallel(sibling, failing)
+      }
+      assert(e.getMessage == "boom")
+      assert(siblingDone.get, "the sibling must settle before the failure propagates")
+    }
+  }
 }
 
 /** A-family percentiles: the approx sketch (the 100 TB path) must land

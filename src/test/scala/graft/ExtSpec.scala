@@ -586,12 +586,16 @@ class IncrementalDedupSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("files-per-bucket trigger: compactStoreIfNeeded fires only past the decay threshold") {
+    def compactStoreIfNeeded(table: String, buckets: Int,
+                             maxFilesPerBucket: Int): Boolean =
+      graft.core.Bucketing.compactIfNeeded(spark, table, buckets,
+        maxFilesPerBucket)(IncrementalDedup.compactStore(spark, table, buckets))
     IncrementalDedup.writeSignatureStore(store, "doc_id", "text", 3, 16, 4,
       "inc_fpb_store", 4)
     val before = spark.table("inc_fpb_store")
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
     // freshly written: exactly one generation — nothing to do
-    assert(!IncrementalDedup.compactStoreIfNeeded(spark, "inc_fpb_store", 4,
+    assert(!compactStoreIfNeeded("inc_fpb_store", 4,
       maxFilesPerBucket = 1))
     // two appended generations push past maxFilesPerBucket = 1
     IncrementalDedup.appendSignatures(
@@ -603,7 +607,7 @@ class IncrementalDedupSpec extends SparkSpec {
         .toDF("doc_id", "text"),
       "doc_id", "text", 3, 16, 4, "inc_fpb_store", 4)
     assert(graft.core.Bucketing.dataFileCount(spark, "inc_fpb_store") > 4)
-    assert(IncrementalDedup.compactStoreIfNeeded(spark, "inc_fpb_store", 4,
+    assert(compactStoreIfNeeded("inc_fpb_store", 4,
       maxFilesPerBucket = 1), "decayed store must trigger a compaction")
     // compacted back to <= one file per bucket, contents preserved
     assert(graft.core.Bucketing.dataFileCount(spark, "inc_fpb_store") <= 4)
@@ -611,7 +615,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
     assert(after.size == before.size + 8) // 2 appended docs x 4 bands
     // and the trigger is quiescent again right after the compaction
-    assert(!IncrementalDedup.compactStoreIfNeeded(spark, "inc_fpb_store", 4,
+    assert(!compactStoreIfNeeded("inc_fpb_store", 4,
       maxFilesPerBucket = 1))
   }
 

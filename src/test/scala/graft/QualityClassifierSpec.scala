@@ -171,6 +171,40 @@ class QualityClassifierSpec extends SparkSpec {
     }
   }
 
+  test("compaction interleaved before a crashed append's replay never folds the partial delta") {
+    val p = pos; val n = neg
+    val waveP = p.filter(col("doc_id") > 2L)
+    val waveN = n.filter(col("doc_id") > 12L)
+    val wave = waveP.withColumn("label", lit(1))
+      .unionByName(waveN.withColumn("label", lit(0)))
+    QualityClassifier.writeClassifierStore(p.filter(col("doc_id") <= 2L),
+      n.filter(col("doc_id") <= 12L), "text", "qc_fold", buckets = 2)
+    try {
+      // crash mid-append: intent written, a PARTIAL batch-0 delta landed
+      // (the positive side only), no commit record
+      graft.core.IngestLedger.intent(spark, "qc_fold", 0L)
+      QualityClassifier.appendToClassifier(waveP, n.filter(col("doc_id") < 0L),
+        "text", "qc_fold", buckets = 2, batchId = 0L)
+      // maintenance interleaves BEFORE the replay: folding the dangling
+      // rows into the -1 sentinel would make the repair's batch_id
+      // filter a no-op and double-count the batch
+      QualityClassifier.compactClassifierStore(spark, "qc_fold", buckets = 2)
+      assert(spark.table("qc_fold")
+        .filter(col("batch_id") === 0L).count() > 0,
+        "dangling delta rows must survive compaction still tagged")
+      QualityClassifier.ingestClassifierBatch(wave, 0L, "label", "text",
+        "qc_fold", buckets = 2)
+      val union = collectScores(QualityClassifier.score(cand, "doc_id", "text",
+        QualityClassifier.fit(p, n, "text").localCheckpoint(true))).toSeq
+      assert(collectScores(QualityClassifier.scoreAgainstStore(
+        cand, "doc_id", "text", "qc_fold")).toSeq == union)
+    } finally {
+      Seq("qc_fold", "qc_fold_meta").foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+      graft.core.IngestLedger.reset(spark, "qc_fold")
+    }
+  }
+
   test("an empty positive corpus still scores: background vocab leans negative, novel vocab positive") {
     val s = spark
     import s.implicits._
